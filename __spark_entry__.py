@@ -3693,7 +3693,8 @@ def _q_gopher_rules(spark, sf_dir):
     (Gopher, RefinedWeb, Dolma) apply before model-based scoring: word
     count in [50, 100k], mean word length in [3, 10], >= 80% of words
     contain an alphabetic character, >= 2 distinct required stop words,
-    and a symbol-to-word lid on '#' and '...' (< 0.1 per word).  Every
+    and a symbol-to-word lid on '#' and '...' (<= 0.1 per word;
+    a higher ratio is rejected).  Every
     threshold is evaluated with CROSS-MULTIPLIED INTEGERS (3*n <= s,
     never s/n >= 3.0), so the flags are bit-identical across engines
     and partitionings — no float thresholds to drift.
@@ -4456,8 +4457,9 @@ def _q_c4_filters(spark, sf_dir):
     Scale shape: one narrow projection — split + transform + filter
     are JVM higher-order functions fused into the scan, zero shuffles
     before the presentation sort; at 10^12 docs this is a pure map
-    stage (the reference's cleaning chain runs the same way inside
-    the extraction kernel, ref stage2_ocr.py:520-610)."""
+    stage (as the reference's per-page cleaning chain, `clean_result`
+    at ref stage2_ocr.py:184-399, runs inside our extraction kernel
+    as kernel/cleaning.py)."""
     d = _t(spark, sf_dir, "documents")
     body = (
         "transform(sequence(0, cast(floor((size(split(text, ' ')) - 1)"

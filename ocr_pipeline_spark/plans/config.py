@@ -32,19 +32,12 @@ class JobConfig:
     mode: str = "fused"                  # fused | staged
     n_buckets: int = 64                  # bucket(warc_ts) partition count
     chunk_size: int | None = None        # buckets per manifest commit
-    salt: int = 8                        # host-split bound (SURVEY §4.4)
-    co_locate_hosts: bool = True         # north-rule salted shuffle
-    num_partitions: int | None = None
-    confidence_floor: float = 0.7        # T5 dispatch threshold (ref :43-45)
-    arrow_batch_rows: int = 512          # Arrow batch cap for html blobs
 
     def validate(self) -> "JobConfig":
         if self.mode not in ("fused", "staged"):
             raise ValueError(f"mode must be fused|staged, got {self.mode!r}")
-        if self.n_buckets < 1 or self.salt < 1:
-            raise ValueError("n_buckets and salt must be >= 1")
-        if not (0.0 <= self.confidence_floor <= 1.0):
-            raise ValueError("confidence_floor must be in [0, 1]")
+        if self.n_buckets < 1:
+            raise ValueError("n_buckets must be >= 1")
         return self
 
 
@@ -53,8 +46,6 @@ def _coerce(value: str, target_type):
         return value.strip().lower() in ("1", "true", "yes", "on")
     if target_type is int:
         return int(value)
-    if target_type is float:
-        return float(value)
     return value
 
 

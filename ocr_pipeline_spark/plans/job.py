@@ -1,16 +1,18 @@
-"""The extraction job: scan → salted repartition → Arrow kernel →
-(describe branch) → bucketed write with manifest resume + metrics.
+"""The extraction job: scan → Arrow kernel → (describe branch) →
+bucketed write with manifest resume + metrics.
 
 Physical plan notes (SURVEY.md §3.4/§4):
   * column pruning: only (url, warc_ts, html, lang) are selected, so
     Catalyst pushes the projection into the scan — the wide `text`
     column is never read;
-  * shuffles: at most two — the optional salted host repartition
-    (key (hash(host), hash(url) % salt): pages co-locate by host,
-    bounded to `salt` sub-buckets so Zipf-skewed hosts cannot pin a
-    task — the north rule's explicit skew handling) and the output
-    repartition by bucket before the write (one file per bucket,
-    shuffling the ~2x smaller extracted text, never the html);
+  * shuffles: `run_pipeline` has exactly one — the output repartition
+    by bucket before the write (one file per bucket, shuffling the ~2x
+    smaller extracted text, never the html).  `run_extraction` alone
+    has at most one: the optional salted host repartition for
+    in-memory host-grouped consumers (key (hash(host), hash(url) %
+    salt): pages co-locate by host, bounded to `salt` sub-buckets so
+    Zipf-skewed hosts cannot pin a task — the north rule's explicit
+    skew handling);
   * the kernel is one narrow mapInPandas over Arrow batches (capped
     records/batch for multi-MB html blobs);
   * in staged mode the describe branch is a filtered projection of the
@@ -23,7 +25,6 @@ from __future__ import annotations
 
 import time
 
-from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,7 +122,6 @@ def run_extraction(
     co_locate_hosts: bool = True,
     counters: dict | None = None,
     co_locate_stage: str = "post",
-    bucket_metrics: tuple | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted DataFrame.
 
@@ -129,11 +129,12 @@ def run_extraction(
     filtered describe branch + broadcast join) — byte-identical output,
     see operators/extract_op.py.
 
-    `co_locate_hosts`: the north rule's salted host shuffle (default).
-    Extraction itself is per-row, so when no downstream operator needs
-    host grouping, `co_locate_hosts=False` skips the exchange and runs
-    map-only over scan splits; output is byte-identical either way
-    (tested).
+    `co_locate_hosts`: the north rule's salted host shuffle (default),
+    for in-memory consumers that group by host.  Extraction itself is
+    per-row, so when no downstream operator needs host grouping,
+    `co_locate_hosts=False` skips the exchange and runs map-only over
+    scan splits (as `run_pipeline` does); output is byte-identical
+    either way (tested).
 
     `co_locate_stage`: where the co-locating exchange sits.
       * 'post' (default): the narrow kernel runs on scan splits and the
@@ -160,7 +161,7 @@ def run_extraction(
 
     if mode == "fused":
         out = distributed.mapInPandas(
-            fused_extract_kernel(describe, counters, bucket_metrics),
+            fused_extract_kernel(describe, counters),
             schema=EXTRACTED_DDL,
         )
     elif mode == "staged":
@@ -201,46 +202,6 @@ def partition_metrics(extracted_with_pkey: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-_METRICS_DDL = (
-    f"{PKEY_COL} int, run_id string, n_docs bigint, n_bytes bigint, "
-    "n_chars_out bigint, n_empty bigint, n_figures bigint, n_described bigint"
-)
-
-
-class _BucketMetricsParam(AccumulatorParam):
-    """Dict accumulator: {pkey: 6-tuple of metric sums}, merged by
-    element-wise addition — the carrier for kernel-side lineage metrics
-    (metrics_mode='observe')."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            cur = a.get(k)
-            a[k] = v if cur is None else tuple(x + y for x, y in zip(cur, v))
-        return a
-
-
-def _metrics_from_acc(spark, acc_value: dict, keys, run_id):
-    """Kernel-accumulated per-bucket sums -> the partition_metrics frame
-    (buckets that produced zero rows are omitted, matching the
-    committed-scan shape)."""
-    keyset = {int(k) for k in keys}
-    rows = [
-        (int(pk), run_id) + tuple(int(x) for x in sums)
-        for pk, sums in sorted(acc_value.items())
-        if int(pk) in keyset and sums[0]
-    ]
-    # ONE slice: a plain createDataFrame spreads the rows over
-    # defaultParallelism partitions, and write_metrics' coalesce(1)
-    # would then evaluate those python partitions sequentially in one
-    # task (~140 ms of worker handshake EACH — measured 5 s for 32)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), _METRICS_DDL
-    )
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -251,7 +212,6 @@ def run_pipeline(
     mode: str = "fused",
     n_buckets: int = DEFAULT_BUCKETS,
     chunk_size: int | None = None,
-    num_partitions: int | None = None,
     salt: int = 8,
     co_locate_hosts: bool = True,
     co_locate_stage: str = "post",
@@ -266,29 +226,21 @@ def run_pipeline(
     duplicates and no missing urls.  `max_chunks` exists for the
     kill/resume tests.
 
-    `metrics_mode`:
-      * ``"committed"`` (default) — lineage metrics come from a
-        column-pruned re-read of the files just committed: metrics
-        describe exactly the bytes on disk, at the cost of a second
-        (pruned) scan of the chunk's output.
-      * ``"observe"`` — per-bucket metrics are accumulated INSIDE the
-        extraction kernel during the write action (dict accumulator
-        keyed by pkey, computed in-kernel via the bit-exact Python twin
-        of the bucket function), eliminating the re-read entirely.
-        Commit counts still come from parquet footers, so the resume
-        manifest remains grounded in committed files.  Same accumulator
-        retry caveat as the P7 counters (a re-executed map stage can
-        double-count) — which is why committed-scan metrics stay the
-        default where lineage must be exact under failures.  Fused mode
-        only.  (A CollectMetrics/Observation variant was measured first
-        and REJECTED: 6 aggregates × buckets of per-row conditional
-        evaluation made the sf0.1 write 40% slower than the re-read it
-        replaced.)
+    One plan: the kernel runs map-only over scan splits and the chunk's
+    only exchange is the repartition by bucket that gives one file per
+    bucket.  Nothing reads host order inside a bucket file, so a host
+    exchange before it would be thrown away.  Lineage metrics come
+    from a column-pruned re-read of the files just committed, so they
+    describe exactly the bytes on disk under task retries and kills
+    (observing them during the write with CollectMetrics was measured
+    40% slower than the re-read).
+
+    `salt`, `co_locate_hosts` and `co_locate_stage` do not change the
+    plan, and `metrics_mode` must be "committed"; all four stay only
+    because scripts/extract_job.py and perfbench/run.py still pass them.
     """
-    if metrics_mode not in ("committed", "observe"):
+    if metrics_mode != "committed":
         raise ValueError(f"unknown metrics_mode: {metrics_mode!r}")
-    if metrics_mode == "observe" and mode != "fused":
-        raise ValueError("metrics_mode='observe' requires mode='fused'")
     catalog = open_catalog(spark, warehouse)
     t_start = time.time()
     # kernel-side progress counters (P7): filled by the extraction kernel
@@ -321,42 +273,23 @@ def run_pipeline(
     processed: list[int] = []
     total_docs = 0
     for keys in chunks:
-        pages_chunk = bucketed_pages.filter(
-            F.col(PKEY_COL).isin([int(k) for k in keys])
-        )
-        metrics_acc = None
-        if metrics_mode == "observe":
-            # fresh accumulator per chunk: values accumulate for exactly
-            # the buckets this chunk writes
-            metrics_acc = spark.sparkContext.accumulator(
-                {}, _BucketMetricsParam()
-            )
+        in_chunk = F.col(PKEY_COL).isin([int(k) for k in keys])
         extracted = with_bucket(
             run_extraction(
-                spark, pages_chunk, describe=describe, mode=mode,
-                num_partitions=num_partitions, salt=salt,
-                co_locate_hosts=co_locate_hosts,
-                co_locate_stage=co_locate_stage,
+                spark, bucketed_pages.filter(in_chunk), describe=describe,
+                mode=mode, co_locate_hosts=False,
                 counters=counters if mode == "fused" else None,
-                bucket_metrics=(
-                    (metrics_acc, n_buckets) if metrics_acc is not None else None
-                ),
             ),
             n_buckets,
         )
-        # one output file per bucket per chunk (bounded small-file count)
+        # the one exchange: one output file per bucket per chunk
+        # (bounded small-file count)
         subset = extracted.repartition(len(keys), F.col(PKEY_COL))
         catalog.overwrite_buckets(table, subset)
-        if metrics_acc is not None:
-            # the write action above populated the accumulator
-            metrics = _metrics_from_acc(spark, metrics_acc.value, keys, run_id)
-        else:
-            # lineage metrics from the committed files (column-pruned scan)
-            committed = catalog.read(table).filter(
-                F.col(PKEY_COL).isin([int(k) for k in keys])
-            )
-            metrics = partition_metrics(committed, run_id)
-        metrics = metrics.withColumn(
+        # lineage metrics from the committed files (column-pruned scan)
+        metrics = partition_metrics(
+            catalog.read(table).filter(in_chunk), run_id
+        ).withColumn(
             "t_end", F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
         )
         catalog.write_metrics(table, metrics)

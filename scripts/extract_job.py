@@ -7,8 +7,12 @@
         --input  <pages parquet path or iceberg table> \
         --warehouse <output warehouse dir> \
         --run-id R1 [--table extracted] [--buckets 64] [--chunk-size 8] \
-        [--no-describe-diagrams] [--mode fused|staged] [--salt 8] \
-        [--no-co-locate] [--synthetic N]
+        [--no-describe-diagrams] [--mode fused|staged] [--synthetic N]
+
+The job extracts map-only over scan splits, repartitions once by output
+bucket and writes one file per bucket; lineage metrics are re-read from
+the committed files.  --salt, --no-co-locate, --co-locate-stage and
+--metrics-mode are accepted for compatibility and do not change the plan.
 
 Env-var equivalents (graft of OCR_* vars, docs/DEPLOYMENT_PLAN.md:205-216):
     EXTRACT_INPUT, EXTRACT_WAREHOUSE, EXTRACT_RUN_ID,
@@ -38,24 +42,20 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--chunk-size", type=int, default=None)
     p.add_argument("--mode", choices=("fused", "staged"), default="fused")
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument(
         "--no-describe-diagrams", action="store_true",
         default=os.environ.get("EXTRACT_DESCRIBE_DIAGRAMS", "1") == "0",
     )
-    p.add_argument("--no-co-locate", action="store_true")
+    ignored = "accepted for compatibility; does not change the plan"
+    p.add_argument("--salt", type=int, default=8, help=ignored)
+    p.add_argument("--no-co-locate", action="store_true", help=ignored)
     p.add_argument(
         "--co-locate-stage", choices=("pre", "post"), default="post",
-        help="where the salted host exchange sits: 'post' (default) "
-        "shuffles markdown-sized extracted rows; 'pre' shuffles raw "
-        "pages (for inputs whose scans expose too few splits)",
+        help=ignored,
     )
     p.add_argument(
-        "--metrics-mode", choices=("committed", "observe"), default="committed",
-        help="lineage metrics source: 'committed' (default) re-reads the "
-        "committed files (pruned scan, exact under any failure); 'observe' "
-        "accumulates per-bucket metrics inside the extraction kernel "
-        "during the write (no re-read; fused mode only)",
+        "--metrics-mode", choices=("committed",), default="committed",
+        help="lineage metrics are always re-read from the committed files",
     )
     p.add_argument(
         "--synthetic", type=int, default=None,

@@ -706,3 +706,43 @@ def test_phrase_search_broadcast_pruned_positional_join(spark):
     assert "Window" not in plan, plan[:2000]
     assert "BroadcastHashJoin" in plan, plan[:3000]
     assert "TakeOrderedAndProject" in plan, plan[:3000]
+
+
+def test_pipeline_write_has_one_exchange(spark, tmp_path, monkeypatch, capsys):
+    """scripts/extract_job.py with only its required flags: the frame
+    run_pipeline hands to the bucketed write has exactly one Exchange
+    (the repartition by bucket) — extraction is map-only, and no host
+    exchange runs before the write."""
+    import contextlib
+    import importlib.util
+    import io
+    import json
+    import os
+    import re
+
+    from ocr_pipeline_spark.sources.catalog import ParquetCatalog
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "extract_job", os.path.join(root, "scripts", "extract_job.py")
+    )
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+
+    plans = []
+    write = ParquetCatalog.overwrite_buckets
+
+    def capture(self, table, df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plans.append(buf.getvalue())
+        return write(self, table, df)
+
+    monkeypatch.setattr(ParquetCatalog, "overwrite_buckets", capture)
+    # -v keeps the shared session's log level
+    assert cli.main(["--synthetic", "200", "--warehouse", str(tmp_path), "-v"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_docs"] == 200
+    assert len(plans) == 1
+    assert len(re.findall(r"^\(\d+\) Exchange", plans[0], re.M)) == 1

@@ -283,41 +283,83 @@ run_pipeline(spark, spark.read.parquet({src!r}), {wh!r}, run_id="rK",
     assert {r.url: r.markdown for r in final} == fused_result
 
 
-def test_pipeline_observe_metrics_match_committed(spark, pages, fused_result):
-    """metrics_mode='observe' collects lineage metrics DURING the write
-    (no committed-output re-read) and must produce the same per-bucket
-    metric rows, data files, and resume manifest as the default
-    committed-scan mode."""
-    wh_a = tempfile.mkdtemp(prefix="wh_committed_")
-    wh_b = tempfile.mkdtemp(prefix="wh_observe_")
-    try:
-        a = run_pipeline(spark, pages, wh_a, run_id="rM", n_buckets=8)
-        b = run_pipeline(
-            spark, pages, wh_b, run_id="rM", n_buckets=8,
-            metrics_mode="observe",
+def test_pipeline_metrics_exact_under_task_retry(spark, pages, tmp_path):
+    """Lineage metrics come only from the committed re-read, so a task
+    retry leaves no trace: a separate JVM on local[2,4] (four attempts
+    per task) whose kernel fails the first attempt of partition 0 must
+    commit the same data, manifests and metrics rows as a clean run."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    src = str(tmp_path / "pages_src")
+    pages.coalesce(2).write.parquet(src)
+    wh_retry, wh_clean = str(tmp_path / "wh_retry"), str(tmp_path / "wh_clean")
+    marker = str(tmp_path / "failed_once")
+
+    child_code = f"""
+import json
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2,4]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+from ocr_pipeline_spark.plans import job
+make_kernel = job.fused_extract_kernel
+
+def flaky_kernel(*args, **kwargs):
+    kernel = make_kernel(*args, **kwargs)
+
+    def run(batches):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open({marker!r}, "w").close()
+            raise RuntimeError("injected failure of a first task attempt")
+        yield from kernel(batches)
+
+    return run
+
+job.fused_extract_kernel = flaky_kernel
+summary = job.run_pipeline(spark, spark.read.parquet({src!r}), {wh_retry!r},
+                           run_id="rR", n_buckets=8)
+print(json.dumps(summary["counters"]))
+"""
+    child = subprocess.run(
+        [sys.executable, "-c", child_code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert child.returncode == 0, child.stderr[-3000:]
+    assert os.path.exists(marker), "no task attempt failed"
+    # the progress counters count each page once across the retry
+    assert json.loads(child.stdout.strip().splitlines()[-1])["pages"] == N_ROWS
+
+    run_pipeline(spark, spark.read.parquet(src), wh_clean, run_id="rR", n_buckets=8)
+
+    def committed(wh):
+        cat = ParquetCatalog(spark, wh)
+        data = {r.url: r.asDict(recursive=True) for r in cat.read("extracted").collect()}
+        mdir = os.path.join(wh, "extracted", "_manifest", "rR")
+        manifests = {}
+        for name in os.listdir(mdir):
+            with open(os.path.join(mdir, name)) as fh:
+                entry = json.load(fh)
+            manifests[entry["pkey"]] = (entry["status"], entry["n_docs"])
+        metrics = sorted(
+            tuple(r) for r in cat.read_metrics("extracted").drop("t_end").collect()
         )
-        assert a["n_docs"] == b["n_docs"] == N_ROWS
-        cat_a, cat_b = ParquetCatalog(spark, wh_a), ParquetCatalog(spark, wh_b)
-        cols = [
-            "pkey", "run_id", "n_docs", "n_bytes", "n_chars_out",
-            "n_empty", "n_figures", "n_described",
-        ]
-        rows_a = {tuple(r) for r in
-                  cat_a.read_metrics("extracted").select(*cols).collect()}
-        rows_b = {tuple(r) for r in
-                  cat_b.read_metrics("extracted").select(*cols).collect()}
-        assert rows_a == rows_b and rows_a
-        # identical committed data + identical manifests
-        out_a = {r.url: r.markdown
-                 for r in cat_a.read("extracted").collect()}
-        out_b = {r.url: r.markdown
-                 for r in cat_b.read("extracted").collect()}
-        assert out_a == out_b == fused_result
-        assert cat_a.completed_buckets("extracted", "rM") == \
-            cat_b.completed_buckets("extracted", "rM")
-    finally:
-        shutil.rmtree(wh_a, ignore_errors=True)
-        shutil.rmtree(wh_b, ignore_errors=True)
+        return data, manifests, metrics
+
+    retry, clean = committed(wh_retry), committed(wh_clean)
+    assert len(retry[0]) == N_ROWS and len(retry[1]) == 8
+    assert retry == clean
+
+
+def test_pipeline_rejects_observe_metrics_mode(spark, pages, tmp_path):
+    with pytest.raises(ValueError, match="metrics_mode"):
+        run_pipeline(spark, pages, str(tmp_path), run_id="rV", metrics_mode="observe")
 
 
 # --- skew bounding ------------------------------------------------------------
