@@ -9,16 +9,17 @@ kernel so per-worker setup happens once, not per row.
 
 Two physical plans produce byte-identical output:
 
-  * fused (default): classify + extract + clean + describe + finalize
-    in ONE narrow pass over the scan — one kernel invocation per row,
-    no second scan, no join.  This is the scale-correct plan: the
+  * fused (default): `kernel.extract_page` per row — classify +
+    extract + clean + describe + finalize in ONE narrow pass over the
+    scan, no second scan, no join.  This is the scale-correct plan: the
     reference only splits its stages for GPU-residency reasons
     (ocr_pipeline.py:250-307) that do not exist here.
   * staged (flag): stage-1 emits body + classification + diagram
     sources; a filtered describe branch computes descriptions for the
     (small) diagram subset; a broadcast left join + finalize kernel
     reassembles.  Mirrors the reference's stage graph (SURVEY.md §3.4)
-    and exists to prove plan-invariance of the output.
+    and stays as the plan-invariance oracle of
+    tests/test_spark_job.py::test_staged_mode_equals_fused.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from ocr_pipeline_spark.kernel.classify import wants_description
 from ocr_pipeline_spark.kernel.describe import describe_diagram_source
 from ocr_pipeline_spark.kernel.page import (
     extract_body,
+    extract_page,
     finalize_page,
     page_num_from_url,
 )
@@ -98,22 +100,16 @@ def fused_extract_kernel(describe: bool, counters: dict | None = None):
                 "n_html_bytes": [0] * n,
             }
             for i, (url, html) in enumerate(zip(pdf["url"], pdf["html"])):
-                body, cls, diagram_sources, n_figures = extract_body(html)
-                description = ""
-                if describe and wants_description(cls) and diagram_sources:
-                    description = _describe(diagram_sources)
                 page_num = page_num_from_url(url)
-                markdown, method, spans = finalize_page(
-                    body, cls, description, page_num
-                )
+                r = extract_page(html, page_num, describe)
                 cols["page_num"][i] = page_num
-                cols["classification"][i] = _cls_cell(cls)
-                cols["method"][i] = method
-                cols["markdown"][i] = markdown
-                cols["description"][i] = description
-                cols["spans"][i] = spans
-                cols["n_chars"][i] = len(markdown)
-                cols["n_figures"][i] = n_figures
+                cols["classification"][i] = _cls_cell(r.classification)
+                cols["method"][i] = r.method
+                cols["markdown"][i] = r.markdown
+                cols["description"][i] = r.description
+                cols["spans"][i] = r.spans
+                cols["n_chars"][i] = r.n_chars
+                cols["n_figures"][i] = r.n_figures
                 cols["n_html_bytes"][i] = len(html) if html is not None else 0
             if counters is not None:
                 counters["pages"].add(n)
@@ -136,7 +132,7 @@ def fused_extract_kernel(describe: bool, counters: dict | None = None):
     return kernel
 
 
-# --- staged kernels ------------------------------------------------------------
+# --- staged kernels: the plan-invariance oracle for the fused kernel ------------
 def stage1_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Classify + extract + clean (no describe, no finalize)."""
     for pdf in batches:

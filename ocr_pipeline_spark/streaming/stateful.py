@@ -1,7 +1,7 @@
 """Custom stateful streaming operator: gap-based sessionization.
 
 The batch shell expresses 30-minute-gap sessions with lag + cumulative
-windows (`__spark_entry__._q_events_sessionized`); on an unbounded
+windows (`queries.relational._q_events_sessionized`); on an unbounded
 stream the same semantics need per-key state that survives across
 micro-batches — exactly what `applyInPandasWithState` provides
 (Arrow-batched grouped state, no per-row Python).

@@ -38,6 +38,10 @@ from ocr_pipeline_spark.kernel.page import (  # noqa: E402
     extract_page,
     page_num_from_url,
 )
+from ocr_pipeline_spark.queries.registry import (  # noqa: E402
+    _WITNESS_DIR as WITNESS_DIR,
+    sf_of,
+)
 from ocr_pipeline_spark.sources.pdf import (  # noqa: E402
     page_text_xy,
     split_pdf_pages,
@@ -45,14 +49,10 @@ from ocr_pipeline_spark.sources.pdf import (  # noqa: E402
 )
 
 SF_DIR = "/root/testdata/sf0.01"
-WITNESS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tests", "fixtures", "witness",
-)
 SEED = 42
-# the sf-derived sizes the queries compute from sf_dir at sf0.01
-N_ASSEMBLE_PAGES = 2000   # max(500, 0.01 * 200_000)
-N_PDF_DOCS = 400          # min(max(100, 0.01 * 40_000), 2000)
+# the sf-derived sizes the queries compute from sf_dir
+N_ASSEMBLE_PAGES = max(500, int(sf_of(SF_DIR) * 200_000))
+N_PDF_DOCS = min(max(100, int(sf_of(SF_DIR) * 40_000)), 2000)
 
 _PAGE_SUFFIX = re.compile(r"/page-\d+/?$")
 

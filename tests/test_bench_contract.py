@@ -56,3 +56,24 @@ def test_run_pipeline_calls_run_extraction_through_module(
             spark, generate_pages_df(spark, 20, 1), str(tmp_path), run_id="x",
             **bench.cli_defaults(),
         )
+
+
+def test_query_modules_match_bench_families():
+    """perfbench/families.py files each query by family for the traced
+    per-family seconds; a query registered in another family's module
+    would skew those numbers silently.  Modules not named there are
+    `other`."""
+    from ocr_pipeline_spark.queries.registry import REGISTRY
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_families", os.path.join(ROOT, "perfbench", "families.py")
+    )
+    families = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(families)
+    wrong = {}
+    for name, q in REGISTRY.items():
+        module = q.fn.__module__.rsplit(".", 1)[-1]
+        expected = module if module in families.FAMILIES else "other"
+        if families.family(name) != expected:
+            wrong[name] = (module, families.family(name))
+    assert REGISTRY and not wrong, f"query module vs perfbench family: {wrong}"

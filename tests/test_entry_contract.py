@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from ocr_pipeline_spark.queries.training import _pack_n_shards
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
@@ -233,8 +234,8 @@ def test_pack_sequences_green_at_two_shard_counts(spark, ddb, n_shards, monkeypa
     Spark query stays hash-identical to the oracle at any value because
     both derive from the same _pack_n_shards()."""
     monkeypatch.setenv("SPARK_GRAFT_PACK_SHARDS", str(n_shards))
-    assert entry_mod._pack_n_shards() == n_shards
-    sdf = entry_mod._q_pack_sequences(spark, SF_DIR)
+    assert _pack_n_shards() == n_shards
+    sdf = entry_mod.queries()["pack_sequences"](spark, SF_DIR)
     spark_rows = [tuple(r) for r in sdf.collect()]
     res = ddb.execute(entry_mod.oracle_sql()["pack_sequences"])
     duck_rows = res.fetchall()
@@ -292,7 +293,7 @@ def test_driver_window_allocation():
         "doc_embeddings", "doc_embed_knn", "ann_lsh_recall",
         "ann_ivf_recall", "embedding_near_dup_lsh_recall",
         "pagerank_step", "hybrid_search", "anchor_texts",
-        "robots_filter", "order_quartiles", "bpe_pair_counts",
+        "robots_filter", "c4_filters", "bpe_pair_counts",
         "bpe_merges", "fuzzy_decontamination", "wet_export",
         "dedup_soft_weights", "url_canonical_dedup", "host_url_hll",
         "heavy_hitters_cms", "containment_pairs", "cdx_index",
@@ -317,7 +318,7 @@ def test_extract_fidelity_nonvacuous(spark):
     sides while the oracle compare stayed green.  Require real overlap:
     the extraction keeps the document's own words, so recall must be
     high for essentially every doc."""
-    rows = entry_mod._q_extract_fidelity(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["extract_fidelity"](spark, SF_DIR).collect()
     assert len(rows) == 500
     nonzero = sum(1 for r in rows if r.n_common > 0)
     assert nonzero == 500, f"only {nonzero}/500 docs overlap"
@@ -332,7 +333,7 @@ def test_mojibake_repair_nonvacuous(spark):
     oracle stayed green.  Require the repair to actually fire on every
     row with real multi-byte content (the garnish alone contributes
     2-, 3- and 4-byte sequences: >= 14 marker bytes)."""
-    rows = entry_mod._q_mojibake_repair(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["mojibake_repair"](spark, SF_DIR).collect()
     assert len(rows) == 500
     assert all(r.did_repair for r in rows)
     assert all(r.n_marks >= 14 for r in rows)
@@ -347,7 +348,7 @@ def test_host_template_lines_strips_banner_keeps_organic_dups(spark):
     0.08) survives — corpus-global line_dedup would have dropped it.
     If the banner synthesis ever drifted between host pages the
     detector would silently keep it and n_kept == n_lines."""
-    rows = entry_mod._q_host_template_lines(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["host_template_lines"](spark, SF_DIR).collect()
     assert len(rows) == 500
     assert all(r.n_lines - r.n_kept == 1 for r in rows), (
         "every doc must lose exactly its banner line"
